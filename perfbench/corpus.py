@@ -4,13 +4,15 @@ The job: MinHash-LSH candidates, n-gram Jaccard pairs resolved by
 connected components, k-means semantic dedup and IVF-PQ top-k, each
 through its registered query, collected to the driver.
 
-Set-up (timed as ``setup_s``): session start, the seeded documents and
-embeddings tables, and one untimed run of the job. That warm-up pays
-the query compilation and Python worker start every fresh process
-pays; timed cold, those dominate the job and swing it by a fifth
-between runs. ``latency_p50_s`` and ``latency_tail_s`` are both the
-wall time of the second run (one sample per run). Every output is then
-checked against the registry's DuckDB oracle.
+Set-up (timed as ``setup_s``): session start and the seeded documents
+and embeddings tables. The window runs the job back to back, starting
+another run while it is due to end inside ``--seconds`` (at least
+one); ``latency_p50_s`` and ``latency_tail_s`` are the median and the
+highest of those runs' wall times. The first run is cold: it pays the
+query compilation, Python worker start and heap growth that a batch
+job submitted to a fresh driver pays every time, and at the benchmark's
+window it is the only run. Every output of every run is then checked
+against the registry's DuckDB oracle.
 """
 
 from __future__ import annotations
@@ -21,7 +23,7 @@ import time
 
 from inputs import write_corpus
 from spans import force, wrap_function
-from worker import compare_frames
+from worker import compare_frames, percentile, tail
 
 N_DOCS = 400
 N_VECS = 400
@@ -38,16 +40,8 @@ def _instrument(tracer) -> None:
     from blockchain_indexer_spark.operators import cluster, kmeans, similarity
     from blockchain_indexer_spark.plans import llmops
 
-    def counted(key):
-        def after(df):
-            df = force(df)
-            tracer.add(key, df.count())
-            return df
-
-        return after
-
-    wrap_function(tracer, llmops, "minhash_lsh_candidates", "dedup", "minhash_lsh", counted("dedup.candidates"))
-    wrap_function(tracer, llmops, "ngram_jaccard_pairs", "dedup", "ngram_jaccard", counted("dedup.verified_pairs"))
+    wrap_function(tracer, llmops, "minhash_lsh_candidates", "dedup", "minhash_lsh", force, "dedup.candidates")
+    wrap_function(tracer, llmops, "ngram_jaccard_pairs", "dedup", "ngram_jaccard", force, "dedup.verified_pairs")
     wrap_function(tracer, cluster, "connected_components", "cluster", "components", force)
     wrap_function(tracer, kmeans, "semantic_dedup", "kmeans", "semantic_dedup", force)
     wrap_function(tracer, similarity, "ivf_pq_topk", "similarity", "ivf_pq_topk", force)
@@ -66,53 +60,60 @@ def run(spark, spec: dict, tracer, t_start: float) -> dict:
 
     sf_dir = os.path.join(spec["run_dir"], "sf")
     write_corpus(sf_dir, spec["seed"], N_DOCS, N_VECS)
-    for name in JOB:
-        REGISTRY[name].build(spark, sf_dir).collect()
     if tracer.enabled:
         _instrument(tracer)
     t0 = time.monotonic()
     setup_s = t0 - t_start
-    out = {}
-    for name in JOB:
-        out[name] = REGISTRY[name].build(spark, sf_dir).toPandas()
-    job_s = time.monotonic() - t0
+    job_s: list[float] = []
+    outs: list[dict] = []
+    while not job_s or time.monotonic() - t0 + job_s[-1] <= spec["seconds"]:
+        t = time.monotonic()
+        outs.append({name: REGISTRY[name].build(spark, sf_dir).toPandas() for name in JOB})
+        job_s.append(time.monotonic() - t)
 
     con = duckdb.connect()
     for t in ("documents", "embeddings"):
         con.sql(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')")
     problems: list[str] = []
+    p, job_tail = tail(job_s)
     info = [
-        f"corpus_dedup: {N_DOCS} documents, {N_VECS} embeddings x 64; set-up "
-        f"{setup_s:.1f} s includes one untimed warm-up run of the job",
-        f"corpus_job_s={job_s:.3f} s = latency_p50_s = latency_tail_s",
+        f"corpus_dedup: {N_DOCS} documents, {N_VECS} embeddings x 64; set-up {setup_s:.1f} s",
+        "corpus_job_s per run: " + " ".join(f"{v:.3f}" for v in job_s),
+        f"corpus_job_s p50={percentile(job_s, 50):.3f} s (= latency_p50_s) "
+        f"tail={job_tail:.3f} s (p{p:g} of {len(job_s)}; = latency_tail_s)",
     ]
     for name in JOB:
         want = con.sql(REGISTRY[name].oracle).df()
-        found = compare_frames(name, out[name], want)
+        found = [f for i, out in enumerate(outs) for f in compare_frames(f"{name} run {i}", out[name], want)]
         problems += found
-        info.append(f"  {name}: {len(out[name])} rows, digest {_digest(out[name])}, {'ok' if not found else 'MISMATCH'}")
+        info.append(f"  {name}: {len(outs[-1][name])} rows, digest {_digest(outs[-1][name])}, {'ok' if not found else 'MISMATCH'}")
     res = {
         "problems": problems,
-        "attempted": len(JOB),
+        "attempted": len(JOB) * len(outs),
         "failed": 0,
         "info": info,
-        "e2e": {"setup_s": setup_s, "latency_p50_s": job_s, "latency_tail_s": job_s},
+        "e2e": {"setup_s": setup_s, "latency_p50_s": percentile(job_s, 50), "latency_tail_s": job_tail},
         "layers": {},
     }
     if not tracer.enabled:
         return res
-    c = tracer.counts
+    n = len(job_s)
+    c = {k: v / n for k, v in tracer.counts.items()}
+
+    def busy(layer: str, name: str) -> float:
+        return tracer.busy_s(layer, name) / n
+
     res["layers"] = {
         "traced.setup_s": (setup_s, "s"),
-        "traced.latency_p50_s": (job_s, "s"),
-        "dedup.minhash_lsh.busy_s": (tracer.busy_s("dedup", "minhash_lsh"), "s"),
+        "traced.latency_p50_s": (percentile(job_s, 50), "s"),
+        "dedup.minhash_lsh.busy_s": (busy("dedup", "minhash_lsh"), "s"),
         "dedup.candidates": (c["dedup.candidates"], "count"),
         "dedup.verified_pairs": (c["dedup.verified_pairs"], "count"),
         "dedup.verified_per_candidate": (c["dedup.verified_pairs"] / max(1.0, c["dedup.candidates"]), "ratio"),
-        "dedup.ngram_jaccard.busy_s": (tracer.busy_s("dedup", "ngram_jaccard"), "s"),
-        "cluster.components.busy_s": (tracer.busy_s("cluster", "components"), "s"),
-        "kmeans.semantic_dedup.busy_s": (tracer.busy_s("kmeans", "semantic_dedup"), "s"),
-        "similarity.ivf_pq_topk.busy_s": (tracer.busy_s("similarity", "ivf_pq_topk"), "s"),
+        "dedup.ngram_jaccard.busy_s": (busy("dedup", "ngram_jaccard"), "s"),
+        "cluster.components.busy_s": (busy("cluster", "components"), "s"),
+        "kmeans.semantic_dedup.busy_s": (busy("kmeans", "semantic_dedup"), "s"),
+        "similarity.ivf_pq_topk.busy_s": (busy("similarity", "ivf_pq_topk"), "s"),
     }
     res["round_counts"] = lambda jobs, stage_times: {}
     res["engine_layers"] = ENGINE_LAYERS

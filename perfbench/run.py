@@ -32,93 +32,26 @@ import threading
 
 HERE = os.path.dirname(os.path.abspath(__file__))
 ROOT = os.path.dirname(HERE)
-WORKLOADS = ("live_tail", "corpus_dedup")
 DRIVER_MEM = "2g"
 CHILD_TIMEOUT_S = 165.0
 
-END_TO_END = {
-    "setup_s": "s",
-    "latency_p50_s": "s",
-    "latency_tail_s": "s",
-    "peak_rss_mb": "MB",
-}
 
-_EVENT_TABLES = (
-    "transaction",
-    "crc_signup",
-    "erc20_transfer",
-    "crc_organisation_signup",
-    "crc_trust",
-    "crc_hub_transfer",
-    "eth_transfer",
-    "gnosis_safe_eth_transfer",
-)
-# Every traced run prints all of these; a layer a workload never calls
-# reads 0 there.
-PER_LAYER = {
-    "traced.setup_s": "s",
-    "traced.latency_p50_s": "s",
-    "runner.round_s": "s",
-    "runner.uncovered_s": "s",
-    "runner.queue_wait_s": "s",
-    "runner.blocks_per_round": "count",
-    "runner.rounds": "count",
-    "runner.spark_jobs_per_round": "count",
-    "runner.spark_stages_per_round": "count",
-    "runner.preload_round_s": "s",
-    "runner.preload_tx_per_s": "1/s",
-    "live_gen_lateness_s": "s",
-    "live_backlog_files": "count",
-    "promote.busy_s": "s",
-    "promote.new_tx": "count",
-    "promote.history_rows_scanned": "count",
-    "promote.new_per_scanned": "ratio",
-    "classify.busy_s": "s",
-    "classify.tx": "count",
-    "extract.busy_s": "s",
-    **{f"extract.rows_out.{t}": "count" for t in _EVENT_TABLES},
-    "sink.append_s": "s",
-    "sink.read_s": "s",
-    "sink.files_written": "count",
-    "sink.bytes_written": "bytes",
-    "sink.files_live": "count",
-    "caches.refresh_s": "s",
-    "caches.stale_keys": "count",
-    "caches.rows_rewritten": "count",
-    "caches.rows_per_stale_key": "ratio",
-    "api.push_s": "s",
-    "api.hashes_pushed": "count",
-    "views.balances.busy_s": "s",
-    "views.trust.busy_s": "s",
-    "views.timeline.busy_s": "s",
-    "views.capacity.busy_s": "s",
-    "views.rows_scanned_per_result": "ratio",
-    "lookup.p50_ms": "ms",
-    "lookup.tail_ms": "ms",
-    "lookups_per_s": "1/s",
-    "dedup.minhash_lsh.busy_s": "s",
-    "dedup.candidates": "count",
-    "dedup.verified_pairs": "count",
-    "dedup.verified_per_candidate": "ratio",
-    "dedup.ngram_jaccard.busy_s": "s",
-    "cluster.components.busy_s": "s",
-    "kmeans.semantic_dedup.busy_s": "s",
-    "similarity.ivf_pq_topk.busy_s": "s",
-    **{
-        f"{layer}.{m}": u
-        for layer in (
-            "runner", "promote", "classify", "extract", "sink", "caches", "views",
-            "dedup", "cluster", "kmeans", "similarity",
-        )
-        for m, u in (("tasks", "count"), ("shuffle_bytes", "bytes"), ("spill_bytes", "bytes"), ("gc_s", "s"))
-    },
-}
+def _benchmark_spec() -> dict:
+    """Workload and metric names and units, from BENCHMARK.json at the
+    repo root. Every traced run prints every per-layer metric; a layer
+    a workload never calls reads 0 there."""
+    with open(os.path.join(ROOT, "BENCHMARK.json")) as f:
+        spec = json.load(f)
+    return {
+        "workloads": [w["name"] for w in spec["workloads"]],
+        "end_to_end": {m["name"]: m["unit"] for m in spec["end_to_end"]},
+        "per_layer": {m["name"]: m["unit"] for m in spec["per_layer"]},
+    }
 
 
-def _children(pid: int) -> list[tuple[int, int]]:
-    """(pid, parent pid) of every live descendant of ``pid`` (the Spark
-    JVM and its Python workers are grandchildren of the workload
-    process)."""
+def _children(pid: int) -> list[int]:
+    """Every live descendant of ``pid`` (the Spark JVM and its Python
+    workers are grandchildren of the workload process)."""
     parents: dict[int, list[int]] = {}
     for entry in os.listdir("/proc"):
         if not entry.isdigit():
@@ -131,18 +64,20 @@ def _children(pid: int) -> list[tuple[int, int]]:
         parents.setdefault(ppid, []).append(int(entry))
     out, todo = [], [pid]
     while todo:
-        parent = todo.pop()
-        kids = parents.get(parent, [])
-        out += [(k, parent) for k in kids]
+        kids = parents.get(todo.pop(), [])
+        out += kids
         todo += kids
     return out
 
 
-def _rss_kb(pid: int) -> int:
+def _pss_kb(pid: int) -> int:
+    """Proportional set size: pages shared between processes (the
+    Python workers are forked from one daemon) are split among them, so
+    the tree's sum counts each page once."""
     try:
-        with open(f"/proc/{pid}/status") as f:
+        with open(f"/proc/{pid}/smaps_rollup") as f:
             for line in f:
-                if line.startswith("VmRSS:"):
+                if line.startswith("Pss:"):
                     return int(line.split()[1])
     except OSError:
         pass
@@ -150,8 +85,8 @@ def _rss_kb(pid: int) -> int:
 
 
 class RssSampler(threading.Thread):
-    """Peak summed resident memory of a process tree, sampled every
-    0.2 s."""
+    """Peak summed proportional resident memory of a process tree,
+    sampled every 0.2 s."""
 
     def __init__(self, pid: int) -> None:
         super().__init__(daemon=True)
@@ -162,16 +97,10 @@ class RssSampler(threading.Thread):
 
     def run(self) -> None:
         while not self._stop_evt.wait(0.2):
-            tree = [(self.pid, 0), *_children(self.pid)]
-            rss = {p: _rss_kb(p) for p, _ in tree}
-            # a child between vfork and exec shares its parent's memory
-            # and reports the same resident size; count that memory once
-            total = sum(kb for p, parent in tree if (kb := rss[p]) != rss.get(parent))
-            if total > self.peak_kb:
-                self.peak_kb = total
-                self.peak_parts = sorted(
-                    (kb for p, parent in tree if (kb := rss[p]) != rss.get(parent)), reverse=True
-                )
+            parts = [_pss_kb(p) for p in (self.pid, *_children(self.pid))]
+            if sum(parts) > self.peak_kb:
+                self.peak_kb = sum(parts)
+                self.peak_parts = sorted(parts, reverse=True)
 
     def stop(self) -> None:
         self._stop_evt.set()
@@ -179,7 +108,7 @@ class RssSampler(threading.Thread):
 
 
 def _kill_tree(pid: int) -> None:
-    for p in [*(c for c, _ in _children(pid)), pid]:
+    for p in [*_children(pid), pid]:
         try:
             os.kill(p, signal.SIGKILL)
         except ProcessLookupError:
@@ -187,13 +116,17 @@ def _kill_tree(pid: int) -> None:
 
 
 def main() -> int:
+    bench = _benchmark_spec()
     ap = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
-    ap.add_argument("--workload", required=True, choices=WORKLOADS)
+    ap.add_argument("--workload", required=True, choices=bench["workloads"])
     ap.add_argument("--seed", type=int, required=True)
     ap.add_argument("--seconds", type=int, required=True)
     ap.add_argument("--trace", type=int, choices=(0, 1), default=0)
     ap.add_argument("--cores", type=int, default=len(os.sched_getaffinity(0)))
     args = ap.parse_args()
+    # a terminated benchmark still runs its clean-up: the workload's
+    # process tree is killed and waited for
+    signal.signal(signal.SIGTERM, lambda *_: sys.exit(1))
     if args.seconds < 1 or args.cores < 1:
         ap.error("--seconds and --cores must be positive")
 
@@ -268,18 +201,22 @@ def main() -> int:
 
     for line in res.get("info", []):
         print(line)
+    # peak memory follows when the JVM chooses to grow its heap, which
+    # swings it by a fifth between identical runs; it is reported, but
+    # is no bounded end-to-end metric
+    peak_rss_mb = sampler.peak_kb / 1024.0
+    print(
+        f"peak_rss_mb={peak_rss_mb:.1f} MB (driver JVM + Python workers; per process "
+        + " ".join(f"{kb / 1024:.0f}" for kb in sampler.peak_parts)
+        + ")"
+    )
+    print(f"failed_frac={res['failed'] / max(1, res['attempted']):.4f} ({res['failed']} of {res['attempted']})")
     if args.trace:
         layers = {k: v for k, (v, _) in res["layers"].items()}
-        metrics = {k: {"value": layers.get(k, 0.0), "unit": u} for k, u in PER_LAYER.items()}
+        layers["traced.peak_rss_mb"] = peak_rss_mb
+        metrics = {k: {"value": layers.get(k, 0.0), "unit": u} for k, u in bench["per_layer"].items()}
     else:
-        e2e = dict(res["e2e"], peak_rss_mb=sampler.peak_kb / 1024.0)
-        metrics = {k: {"value": e2e[k], "unit": u} for k, u in END_TO_END.items()}
-        print(
-            f"peak_rss_mb={e2e['peak_rss_mb']:.1f} MB (driver JVM + Python workers; per process "
-            + " ".join(f"{kb / 1024:.0f}" for kb in sampler.peak_parts)
-            + ")"
-        )
-        print(f"failed_frac={res['failed'] / max(1, res['attempted']):.4f} ({res['failed']} of {res['attempted']})")
+        metrics = {k: {"value": res["e2e"][k], "unit": u} for k, u in bench["end_to_end"].items()}
     print(
         json.dumps(
             {

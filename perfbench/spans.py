@@ -60,16 +60,11 @@ class Tracer:
             with self._lock:
                 self.spans.append(rec)
 
-    @contextlib.contextmanager
     def counting(self):
-        """Job group for the benchmark's own count jobs, so they are
-        never charged to a layer or a round."""
-        prev = self.sc.getLocalProperty(GROUP_KEY)
-        self.sc.setLocalProperty(GROUP_KEY, OWN_GROUP)
-        try:
-            yield
-        finally:
-            self.sc.setLocalProperty(GROUP_KEY, prev)
+        """Span for the benchmark's own count jobs: its job group keeps
+        them out of every layer's engine counts, and its wall time can
+        be taken out of the round it ran in."""
+        return self.span(OWN_GROUP, "count")
 
     def add(self, key: str, value: float) -> None:
         if self.enabled:
@@ -104,10 +99,11 @@ class Tracer:
             json.dump({"spans": self.spans, "counts": self.counts, "layers": layers}, f)
 
 
-def wrap_function(tracer: Tracer, module, attr: str, layer: str, name: str, after=None):
+def wrap_function(tracer: Tracer, module, attr: str, layer: str, name: str, after=None, count=None):
     """Replace ``module.attr`` with a traced twin. ``after(result)``
     runs inside the span and forces the lazy result with one action;
-    what it returns replaces the result."""
+    what it returns replaces the result. ``count`` names a counter that
+    gets the result's row count, taken after the span closes."""
     fn = getattr(module, attr)
 
     def traced(*args, **kwargs):
@@ -115,6 +111,9 @@ def wrap_function(tracer: Tracer, module, attr: str, layer: str, name: str, afte
             out = fn(*args, **kwargs)
             if after is not None:
                 out = after(out)
+        if count is not None:
+            with tracer.counting():
+                tracer.add(count, out.count())
         return out
 
     traced.__wrapped__ = fn

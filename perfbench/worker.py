@@ -43,13 +43,10 @@ def start_session(spec: dict, event_log_dir: str | None):
     from the environment; tracing adds only the event log."""
     from blockchain_indexer_spark.session import get_spark
 
-    # commit and touch the whole driver heap at start, so resident
-    # memory does not swing with when the collector grows the heap
-    heap = os.environ["SPARK_GRAFT_DRIVER_MEM"]
-    extra = {"spark.driver.extraJavaOptions": f"-Xms{heap} -XX:+AlwaysPreTouch"}
+    extra = None
     if event_log_dir is not None:
         os.makedirs(event_log_dir, exist_ok=True)
-        extra |= {
+        extra = {
             "spark.eventLog.enabled": "true",
             "spark.eventLog.dir": "file://" + event_log_dir,
             "spark.eventLog.compress": "false",
