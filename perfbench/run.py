@@ -22,6 +22,7 @@ in ``perfbench/_out/<workload>-<seed>-trace.json``.
 from __future__ import annotations
 
 import argparse
+import ctypes
 import json
 import os
 import shutil
@@ -107,12 +108,31 @@ class RssSampler(threading.Thread):
         self.join(timeout=5)
 
 
-def _kill_tree(pid: int) -> None:
-    for p in [*_children(pid), pid]:
+PR_SET_CHILD_SUBREAPER = 36
+
+
+def _become_subreaper() -> None:
+    """Orphaned descendants are reparented to this process instead of
+    to init: when the workload process exits, the Spark JVM it leaves
+    shutting down and the Python worker daemon (which puts itself in
+    its own process group) stay in reach of ``_end_tree``."""
+    libc = ctypes.CDLL(None, use_errno=True)
+    if libc.prctl(PR_SET_CHILD_SUBREAPER, 1, 0, 0, 0) != 0:
+        raise OSError(ctypes.get_errno(), "prctl(PR_SET_CHILD_SUBREAPER)")
+
+
+def _end_tree() -> None:
+    """Kill every descendant and reap each until none is left."""
+    while True:
+        for p in _children(os.getpid()):
+            try:
+                os.kill(p, signal.SIGKILL)
+            except ProcessLookupError:
+                pass
         try:
-            os.kill(p, signal.SIGKILL)
-        except ProcessLookupError:
-            pass
+            os.waitpid(-1, 0)
+        except ChildProcessError:
+            return
 
 
 def main() -> int:
@@ -129,6 +149,7 @@ def main() -> int:
     signal.signal(signal.SIGTERM, lambda *_: sys.exit(1))
     if args.seconds < 1 or args.cores < 1:
         ap.error("--seconds and --cores must be positive")
+    _become_subreaper()
 
     # the program is built from the checkout itself; without it there
     # is nothing to measure
@@ -178,9 +199,10 @@ def main() -> int:
             except subprocess.TimeoutExpired:
                 code = None
             finally:
+                # a second SIGTERM must not cut the clean-up short
+                signal.signal(signal.SIGTERM, signal.SIG_IGN)
                 sampler.stop()
-                _kill_tree(proc.pid)
-                proc.wait()
+                _end_tree()
         if code != 0 or not os.path.isfile(result_path):
             with open(log_path, errors="replace") as f:
                 tail = f.readlines()[-40:]
