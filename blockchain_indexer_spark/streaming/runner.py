@@ -795,7 +795,7 @@ class IngestPipeline:
 
         def _refresh_balances() -> None:
             stale_b = stale_balance_addresses(
-                batch_tables["erc20_transfer"], batch_tables["crc_hub_transfer"], signups
+                batch_tables["erc20_transfer"], batch_tables["crc_hub_transfer"]
             )
             fresh_b = crc_balances_by_safe_and_token(crc_ledger(erc20_full, signup_full))
             _publish(

@@ -18,6 +18,10 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 # imported because it reads SPARK_GRAFT_SHUFFLE_PARTITIONS at import).
 os.environ.setdefault("SPARK_GRAFT_TEST_CPUS", "8")
 os.environ.setdefault("SPARK_GRAFT_SHUFFLE_PARTITIONS", "8")
+# The fixtures' live data is a few MB, but under the 16g production
+# default the test JVM's heap grows lazily to 12-15 GB resident over a
+# full run, most of a 16 GB host; 8g bounds it without changing results.
+os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", "8g")
 
 from blockchain_indexer_spark.session import get_spark  # noqa: E402
 

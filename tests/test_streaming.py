@@ -99,30 +99,20 @@ def test_streaming_ingest_exactly_once(spark, tmp_path_factory, feed_df):
 
 
 @pytest.mark.slowe2e
-def test_micro_batch_promote_latency(spark, tmp_path_factory, feed_df):
+def test_micro_batch_promote_latency(spark, tmp_path_factory, feed_df, sf_dir):
     """BASELINE live-mode proxy: a 2000-row micro-batch must promote
     well inside the reference's 10 s serial-flush budget (Settings.cs:
     169-170). Generous 20 s bound absorbs test-host jitter; the
     measured value is printed for the record."""
     import time
 
-    from blockchain_indexer_spark.plans.chain import derive_chain
+    from blockchain_indexer_spark.plans.chain import chain_feed
 
     out = str(tmp_path_factory.mktemp("latency"))
-    # build a 2000-tx feed from the derived chain at sf0.001
-    chain = derive_chain(spark, "/root/testdata/sf0.001").limit(2000).cache()
-    n = chain.count()
+    # the whole derived chain at sf0.001 (~1000 txs, under 2000) as one feed
+    feed = chain_feed(spark, sf_dir).cache()
+    n = feed.count()
     assert n >= 1000
-    from pyspark.sql import Window as W
-
-    n_in_block = F.count("*").over(W.partitionBy("block_number")).cast("int")
-    feed = chain.select(
-        "block_number",
-        "block_hash",
-        (F.unix_timestamp("timestamp")).alias("block_timestamp"),
-        n_in_block.alias("total_transaction_count"),
-        "hash", "index", "from", "to", "value", "input", "nonce", "type", "logs",
-    )
     pipe = IngestPipeline(spark, out)
     t0 = time.time()
     pipe.process_batch(feed)
